@@ -13,8 +13,9 @@ session view no longer moves it off the scored ledger. Both components are
 still printed separately (``total_sec`` is the old-basis number, directly
 comparable to r14/r15 artifacts; ``prepare_sec`` + the per-item ``prepare``
 map break down the warm-up). ``artifacts`` reports the cold/warm status of
-every across-run ``.weights_cache`` artifact touched during prepare, so a
-reader can tell a cold-store run from a warm one (r15 verdict demand #2).
+every across-run ``.weights_cache`` artifact touched during the process
+lifetime (prepare and every query; first touch wins), so a reader can tell
+a cold-store run from a warm one.
 """
 
 from __future__ import annotations

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -208,6 +209,35 @@ def test_stream_upsert_is_slicing_independent(spark, sf_dir):
     )
     c = key(batch)
     assert a == b == c
+
+
+def test_conf_overrides_restore_on_failure(spark, sf_dir, monkeypatch):
+    # a stream_upsert_sink whose setup fails must not leak its
+    # partitionOverwriteMode / shuffle.partitions overrides to the session,
+    # and conf_override itself restores (or unsets) when its body raises
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.session import (
+        conf_override,
+    )
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.streaming import (
+        score_stream as SS,
+    )
+
+    keys = ("spark.sql.sources.partitionOverwriteMode", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+
+    def fail_setup():
+        raise OSError("scratch root unavailable")
+
+    monkeypatch.setattr(SS, "_sweep_stale_scratch", fail_setup)
+    with pytest.raises(OSError):
+        SS.stream_upsert_sink(spark, sf_dir)
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+    with pytest.raises(RuntimeError):
+        with conf_override(spark, **dict(zip(keys, ("dynamic", "1")))):
+            assert spark.conf.get(keys[1]) == "1"
+            raise RuntimeError("body failed")
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def test_rendezvous_shards_minimal_movement(spark, sf_dir):

@@ -66,15 +66,6 @@ def main():
         TABLES,
     )
 
-    # Staged (dormant) plan modules: registered for this check only when
-    # asked, so the driver-facing registry stays window-budget-clean.
-    #   SPARK_GRAFT_STAGED=queries_bpe python tools/check.py <sf> [query ...]
-    for staged in filter(None, os.environ.get("SPARK_GRAFT_STAGED", "").split(",")):
-        __import__(
-            "unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.plans."
-            + staged.strip()
-        )
-
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:

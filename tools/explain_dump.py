@@ -677,11 +677,6 @@ def main() -> None:
     spark = get_spark("explain_dump")
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    # staged (dormant) modules contribute plans too — their scale claims
-    # should be readable before registration day
-    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.plans import (  # noqa: F401
-        queries_bpe as _staged_bpe,
-    )
     qs = entry_mod.queries()
 
     sections = [
@@ -692,40 +687,7 @@ def main() -> None:
         "are visible here directly.",
         "",
     ]
-    # staged-BPE picks: the merge table itself is a LocalTableScan (driver
-    # assembles it from bounded 1-row collects), so the plans that carry the
-    # scale claims are the per-round pair count and the encode pass.
-    def _bpe_pair_count_df(spark, sf_dir):
-        from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.operators import (
-            bpe,
-        )
-        from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.sources.readers import (
-            load_table,
-        )
-
-        wf = bpe.word_frequencies(load_table(spark, sf_dir, "documents"))
-        words = wf.select(bpe._init_symbols().alias("syms"), "cnt")
-        return bpe._pair_counts(words)
-
-    qs = dict(qs)
-    qs["(bpe pair-count round, STAGED)"] = _bpe_pair_count_df
-    staged_picks = [
-        (
-            "(bpe pair-count round, STAGED)",
-            "BPE training's per-round plan: explode adjacent symbol pairs of "
-            "the compact word table, partial_sum before the exchange — the "
-            "skinny shuffle whose round count (not row count) binds the "
-            "trainer's wall; zero Python nodes.",
-        ),
-        (
-            "t_bpe_compression",
-            "BPE encode + per-source profile: exactly one Arrow-batched "
-            "Python stage (greedy-by-rank over broadcast-sized ranks in the "
-            "closure), map-only until the final combinable aggregation.",
-        ),
-    ]
-
-    for name, note in PICKS + staged_picks:
+    for name, note in PICKS:
         df: DataFrame = qs[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(mode)
         # keep the operator tree + scan details; drop the (long) per-node

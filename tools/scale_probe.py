@@ -485,163 +485,6 @@ def synthetic_vocab_rows(spark) -> list[str]:
     return out
 
 
-def synthetic_bpe_rows(spark) -> list[str]:
-    """Synthetic scale probes for the STAGED BPE trainer (operators/bpe.py,
-    dormant registry module plans/queries_bpe.py). The scale claim: training
-    cost tracks the WORD-TABLE size (Heaps-law compact), not the corpus —
-    the only corpus-sized stage is the word_frequencies groupBy. Probe A
-    holds the vocabulary fixed and grows the corpus ×10: word_frequencies
-    may grow up to ~linearly, the 32-merge loop must stay FLAT. Probe B
-    holds the corpus fixed and grows the distinct vocabulary ×10: the loop's
-    skinny pair-count shuffles may grow sublinearly. Min of two runs."""
-    import numpy as np
-    import pandas as pd
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.operators import (
-        bpe as BPE,
-    )
-
-    def synth(n_docs: int, vocab: int):
-        rng = np.random.RandomState(13)
-        toks = rng.randint(0, vocab, (n_docs, 40))
-        pdf = pd.DataFrame(
-            {
-                "doc_id": np.arange(1, n_docs + 1, dtype=np.int64),
-                "text": [" ".join(f"w{t}" for t in row) for row in toks],
-            }
-        )
-        df = spark.createDataFrame(pdf).repartition(32).cache()
-        df.count()
-        return df
-
-    def probe(n_docs: int, vocab: int):
-        df = synth(n_docs, vocab)
-        wf_walls, tr_walls = [], []
-        n_words = 0
-        for _ in range(2):
-            t0 = time.time()
-            n_words = BPE.word_frequencies(df).count()
-            wf_walls.append(time.time() - t0)
-        wf = BPE.word_frequencies(df)
-        for _ in range(2):
-            t0 = time.time()
-            merges, _w = BPE.train_bpe(wf, num_merges=32, min_count=2)
-            tr_walls.append(time.time() - t0)
-        df.unpersist()
-        got = (n_words, round(min(wf_walls), 2), round(min(tr_walls), 2), len(merges))
-        print(f"# bpe docs={n_docs} vocab={vocab}: words={got[0]} wf={got[1]}s train={got[2]}s", file=sys.stderr)
-        return got
-
-    cells = {
-        ("A", 2_000): probe(2_000, 2_000),
-        ("A", 20_000): probe(20_000, 2_000),
-        ("B", 20_000): probe(2_000, 20_000),
-    }
-    a1, a10, b10 = cells[("A", 2_000)], cells[("A", 20_000)], cells[("B", 20_000)]
-
-    # batched-merge scale mode at the B config: same 32 merges, ~1/8 rounds
-    dfb = synth(2_000, 20_000)
-    wfb = BPE.word_frequencies(dfb)
-    bws = []
-    n_rounds = 0
-    for _ in range(2):
-        t0 = time.time()
-        bm, _w = BPE.train_bpe_batched(wfb, num_merges=32, batch_size=8)
-        bws.append(time.time() - t0)
-        n_rounds = max(r[1] for r in bm) + 1
-    batched_wall = round(min(bws), 2)
-    dfb.unpersist()
-    print(f"# bpe batched(8) vocab=20000: {batched_wall}s, {n_rounds} rounds", file=sys.stderr)
-    out = [
-        "## Synthetic steps — STAGED BPE trainer (word-table-bound claim)",
-        "",
-        "| probe | docs | distinct vocab | word-table rows | word_freq wall (s) | 32-merge train wall (s) |",
-        "|---|---|---|---|---|---|",
-        f"| A ×1 | 2000 | 2000 | {a1[0]} | {a1[1]} | {a1[2]} |",
-        f"| A ×10 docs | 20000 | 2000 | {a10[0]} | {a10[1]} | {a10[2]} |",
-        f"| B ×10 vocab | 2000 | 20000 | {b10[0]} | {b10[1]} | {b10[2]} |",
-        "",
-        f"×10 corpus at fixed vocab: word_freq ×{a10[1] / a1[1]:.1f} (the one",
-        f"corpus-sized combinable shuffle), train ×{a10[2] / a1[2]:.1f} — the",
-        "loop never re-touches the corpus. ×10 vocabulary at fixed corpus:",
-        f"train ×{b10[2] / a1[2]:.1f} over a ×{b10[0] / a1[0]:.1f} word table —",
-        "per-round cost is scheduler latency + a skinny pair-count shuffle,",
-        "so the wall tracks rounds, not rows, until the word table stops",
-        "fitting a few partitions (~10^7 rows at crawl scale, still hundreds",
-        "of MB — the Heaps-law bound is the 100 TB claim). Rounds are the",
-        "binding cost, which is why the 32k-vocab path is the batched mode:",
-        f"same 32 merges at ×10 vocab in {n_rounds} rounds / {batched_wall} s",
-        f"(vs {b10[2]} s exact, ×{b10[2] / batched_wall:.1f}) — disjoint-set",
-        "batching compresses rounds ~batch_size-fold at any vocabulary size.",
-        "",
-    ]
-    return out
-
-
-def synthetic_unigram_rows(spark) -> list[str]:
-    """Synthetic scale probes for the STAGED unigram-LM trainer
-    (operators/unigram.py, dormant plans/queries_unigram.py). Same
-    word-table-bound claim as BPE: the corpus is read once (the trainer
-    checkpoints the word table up front — without the barrier every EM
-    round re-executed the corpus-sized word count, measured ×2.1 on the
-    ×10-docs step), then seeding + 4 EM rounds scan only the compact
-    table. Min of two runs."""
-    import numpy as np
-    import pandas as pd
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.operators import (
-        bpe as BPE,
-        unigram as UNI,
-    )
-
-    def probe(n_docs: int, vocab: int):
-        rng = np.random.RandomState(13)
-        toks = rng.randint(0, vocab, (n_docs, 40))
-        pdf = pd.DataFrame(
-            {
-                "doc_id": np.arange(1, n_docs + 1, dtype=np.int64),
-                "text": [" ".join(f"w{t}" for t in row) for row in toks],
-            }
-        )
-        df = spark.createDataFrame(pdf).repartition(32).cache()
-        df.count()
-        wf = BPE.word_frequencies(df)
-        n_words = wf.count()
-        ws = []
-        for _ in range(2):
-            t0 = time.time()
-            UNI.train_unigram(wf, vocab_size=160, seed_size=400, em_rounds=4)
-            ws.append(time.time() - t0)
-        df.unpersist()
-        got = (n_words, round(min(ws), 2))
-        print(f"# unigram docs={n_docs} vocab={vocab}: words={got[0]} train={got[1]}s", file=sys.stderr)
-        return got
-
-    a1 = probe(2_000, 2_000)
-    a10 = probe(20_000, 2_000)
-    b10 = probe(2_000, 20_000)
-    return [
-        "## Synthetic steps — STAGED unigram-LM trainer (word-table-bound claim)",
-        "",
-        "| probe | docs | distinct vocab | word-table rows | seed + 4-EM train wall (s) |",
-        "|---|---|---|---|---|",
-        f"| ×1 | 2000 | 2000 | {a1[0]} | {a1[1]} |",
-        f"| ×10 docs | 20000 | 2000 | {a10[0]} | {a10[1]} |",
-        f"| ×10 vocab | 2000 | 20000 | {b10[0]} | {b10[1]} |",
-        "",
-        f"×10 corpus at fixed vocab: train ×{a10[1] / a1[1]:.1f} (flat — the",
-        "corpus is read once into the checkpointed word table; EM scans only",
-        f"that). ×10 vocabulary: ×{b10[1] / a1[1]:.1f} over a ×{b10[0] / a1[0]:.1f}",
-        "word table — the E-step is an Arrow island linear in distinct words",
-        "with the per-word lattice bounded by len × max_piece_len; the",
-        "fixed-point integer aggregation keeps the round combinable and",
-        "order-independent at any partitioning.",
-        "",
-    ]
-
-
 def synthetic_exactjaccard_rows(spark) -> list[str]:
     """Synthetic ×10 probe for the r9 hot-shingle df cap on the EXACT
     inverted-index joins (`d_ngram_jaccard_pairs` / `d_containment_pairs`)
@@ -819,8 +662,6 @@ def main() -> None:
     lines += synthetic_textlsh_rows(spark)
     lines += synthetic_exactjaccard_rows(spark)
     lines += synthetic_vocab_rows(spark)
-    lines += synthetic_bpe_rows(spark)
-    lines += synthetic_unigram_rows(spark)
     lines += graph_rounds_rows(spark)
     lines += [
         "Notes on the shapes (stable across regenerations):",

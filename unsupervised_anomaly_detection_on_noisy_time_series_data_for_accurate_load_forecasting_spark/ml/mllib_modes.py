@@ -294,7 +294,12 @@ def det_ann_scores_np(
             X = np.array([np.asarray(f, dtype=np.float64) for f in pdf["feature"]])
             n, dim = X.shape
             chunk = min(512, max(1, budget // max(1, len(bank) * dim * 8)))
-            if dbuf is None or dbuf.shape[1] != dim or len(dbuf) < min(chunk, n):
+            if (
+                dbuf is None
+                or dbuf.shape[1] != len(bank)
+                or dbuf.shape[2] != dim
+                or len(dbuf) < min(chunk, n)
+            ):
                 dbuf = np.empty((chunk, len(bank), dim))  # bank ⊇ cells
                 d2buf = np.empty((chunk, len(bank)))
             d2min = np.empty(n)

@@ -27,137 +27,64 @@ from . import queries_asof  # noqa: E402,F401
 
 
 def prepare(spark, sf_dir: str) -> dict[str, float]:
-    """Warm every session-lifetime shared memo for ``sf_dir`` — persisted
-    views AND the disk-checkpointed neural weights — returning
-    {item: seconds} (per-item build time; wall is lower: see below).
+    """Warm the multi-consumer session views for ``sf_dir`` — persisted
+    frames, checkpoints and model weights — plus the keyed softpatch bank
+    artifacts, returning {item: seconds} per warmed callable. Items run
+    concurrently, so an item's seconds include any wait for a view another
+    item is building, and the wall is about the longest item.
 
-    A resident engine pays hot-view materialization and model checkpoint
-    restore once at startup, not inside whichever query happens to touch
-    them first. The bench calls this in an untimed setup step and reports
-    the cost as its own line, so per-query timings measure the query's plan
-    rather than first-toucher attribution (round-4 verdict: s_lsh_near_pairs
-    billed 22.7 s in the driver bench vs 2.8 s isolated, purely the shared
-    signature pass; round-6: m17_ae_imputation billed 16.7 s on a cold
-    .weights_cache).
-
-    Items build CONCURRENTLY as a dependency DAG (driver threads submitting
-    separate Spark jobs — local[32] has idle cores during any single
-    small-SF job): each item starts the moment its dependencies finish, so
-    prepare wall ≈ the longest dependency chain, not the sum. The copurchase
-    edge view is warmed again as of r12 — seven graph queries now share it
-    (it was dropped when it had a single consumer); r15 extends the same
-    rule to every remaining multi-consumer view (trading pairs/bipartite
-    edges, span islands, text MinHash pairs + CC labels)."""
+    A resident engine pays view materialization and artifact restore once
+    at startup, not inside whichever query happens to touch them first; the
+    bench calls this in a setup step and reports its cost on its own line,
+    so per-query timings measure the query's plan rather than first-toucher
+    billing. Items run in one thread pool (driver threads submitting
+    separate Spark jobs, which fill cores any single small-SF job leaves
+    idle). There is no dependency table: a view that needs another calls
+    it, and the view locks (plans.shared.session_view) make the second
+    caller wait for the first build instead of building again. A DataFrame
+    item is counted so its persisted blocks materialize here."""
     import time
-    from concurrent.futures import Future, ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import DataFrame as _DF
+    from pyspark.sql import DataFrame
 
-    from . import (
-        queries_llmdata,
-        queries_ml,
-        queries_neural,
-        queries_similarity,
-        queries_text,
+    from . import queries_llmdata, queries_ml, queries_neural, queries_similarity, queries_text, shared
+
+    items = (
+        shared.hourly_df,
+        shared.prepared_df,
+        shared.cleaned_points_df,
+        shared.shingles_df,
+        shared.span_islands_df,
+        shared.copurchase_edges_df,
+        shared.copurchase_deg_df,
+        shared.copurchase_wedges_df,
+        shared.trading_pairs_df,
+        shared.bipartite_edges_df,
+        queries_ml._embedded,
+        queries_ml._ensure_banks,
+        queries_neural.ensure_ae_weights,
+        queries_neural.ensure_fc_weights,
+        queries_similarity._bands,
+        queries_similarity._near_pairs_all,
+        queries_similarity._pq_books,
+        queries_similarity._sem_cents,
+        queries_text._mh_bands,
+        queries_text._mh_pairs_02,
+        queries_text._mh_cc_05,
+        queries_llmdata._ppl_topk,
     )
-    from .shared import (
-        bipartite_edges_df,
-        cleaned_points_df,
-        copurchase_deg_df,
-        copurchase_edges_df,
-        copurchase_wedges_df,
-        hourly_df,
-        prepared_df,
-        shingles_df,
-        span_islands_df,
-        trading_pairs_df,
-    )
 
-    out: dict[str, float] = {}
-    futs: dict[str, Future] = {}
-
-    def run(name, build, deps):
-        for d in deps:
-            futs[d].result()  # propagate dep failures too
+    def run(build) -> float:
         t0 = time.time()
         built = build(spark, sf_dir)
-        if isinstance(built, _DF):
-            built.count()  # force the persist to materialize
-        out[name] = round(time.time() - t0, 3)
+        if isinstance(built, DataFrame):
+            built.count()
+        return round(time.time() - t0, 3)
 
-    dag = (
-        ("hourly", hourly_df, ()),
-        # lsh_bands restores from the disk-checkpointed signature artifact
-        # (parquet scan + re-attach join) and ae/fc weights restore via the
-        # input-bytes alias — all I/O-bound on a warm cache — so the
-        # wall-clock critical path is ml_embedded (the one CPU-saturating
-        # item left): it launches at t=0 with the cores to itself, while
-        # the small Spark jobs (bands restore → near-pairs → PQ train →
-        # SemDeDup centroids) run as ONE serialized low-width chain instead
-        # of four concurrent jobs all fighting embedded for executors.
-        ("ml_embedded", queries_ml._embedded, ()),
-        # text-shingle inverted index: r9 — every exact-Jaccard/containment/
-        # df-stats/minhash consumer reads this one persisted frame instead
-        # of re-deriving the tokenize→hash→window chain per plan subtree
-        ("text_shingles", shingles_df, ()),
-        # full-corpus MinHash band keys over the shingle view: one signature
-        # groupBy per session; sampled/delta consumers filter it by doc_id
-        ("text_mh_bands", queries_text._mh_bands, ("text_shingles",)),
-        ("lsh_bands", queries_similarity._bands, ()),
-        # r15c: the pair memo is now threshold-free (-1.0) — s_knn_graph and
-        # s_lsh_near_pairs join its consumer set (filters of one frame)
-        ("lsh_near_pairs", queries_similarity._near_pairs_all, ("lsh_bands",)),
-        ("pq_codebooks", queries_similarity._pq_books, ("lsh_near_pairs",)),
-        ("sem_centroids", queries_similarity._sem_cents, ("pq_codebooks",)),
-        ("prepared", prepared_df, ("hourly",)),
-        # keyed softpatch bank artifacts (gaussian + LOF): the cold fit is a
-        # one-time build cost of the corpus, not a property of the scoring
-        # plan — r14's artifact-key rotation billed it to whichever bench
-        # query hit it first (ml_softpatch_scores 16.3 s driver vs 0.3 s
-        # warm); warming here reports it honestly in the prepare map
-        ("sp_banks", queries_ml._ensure_banks, ("ml_embedded",)),
-        ("ae_weights", queries_neural.ensure_ae_weights, ("hourly", "prepared")),
-        ("fc_weights", queries_neural.ensure_fc_weights, ("prepared",)),
-        # co-purchase edge view: removed from prepare when it had ONE
-        # consumer, re-added now that the whole graph family shares it
-        # (pagerank, triangles, k-core, assortativity, local clustering,
-        # node-Jaccard, resource-allocation — r12) — first-toucher billing
-        # was charging whichever graph query ran first ~5 s of shared build
-        ("copurchase_edges", copurchase_edges_df, ()),
-        # r15c: degree table (six consumers: node-Jaccard, assortativity,
-        # local clustering, resource-allocation, triangles, degree-hist) and
-        # the capped-center wedge frame (node-Jaccard, local clustering,
-        # resource-allocation) — each was rebuilt per query before.
-        ("copurchase_deg", copurchase_deg_df, ("copurchase_edges",)),
-        ("copurchase_wedges", copurchase_wedges_df, ("copurchase_deg",)),
-        # r15c: cleaned point frame (pipeline_anomaly_e2e + forecast_ab_neural)
-        ("cleaned_points", cleaned_points_df, ("prepared",)),
-        # r15: the remaining multi-consumer lazy views, same first-toucher
-        # argument as copurchase (each is a corpus-level derived view shared
-        # by >= 2 registered queries; the stale "one consumer" rationale for
-        # lazy build predates r15's sharing):
-        # - trading pairs -> symmetric bipartite edges (g_hits; g_pagerank +
-        #   g_bfs_hops)
-        ("trading_pairs", trading_pairs_df, ()),
-        ("bipartite_edges", bipartite_edges_df, ("trading_pairs",)),
-        # - duplicate-span island frame (d_dup_spans + d_dup_span_removal)
-        ("span_islands", span_islands_df, ()),
-        # - text MinHash verified pairs at 0.2 (d_minhash_lsh_pairs,
-        #   d_cross_source_overlap, d_incremental_dedup, pipeline_near_dedup)
-        #   and the 0.5-graph CC labels (d_dup_cluster_hist + 2 more)
-        ("text_mh_pairs", queries_text._mh_pairs_02, ("text_mh_bands",)),
-        ("text_mh_cc", queries_text._mh_cc_05, ("text_mh_pairs",)),
-        # r15c: bigram-perplexity top-k (t_bigram_perplexity +
-        # pipeline_quality_funnel) — the memo landed in r15 but was lazy,
-        # so its ~6 s LM train billed to whichever consumer ran first
-        ("ppl_topk", queries_llmdata._ppl_topk, ()),
-    )
-    with ThreadPoolExecutor(max_workers=len(dag)) as ex:
-        for name, build, deps in dag:
-            futs[name] = ex.submit(run, name, build, deps)
-        for f in futs.values():
-            f.result()
-    return out
+    with ThreadPoolExecutor(max_workers=len(items)) as ex:
+        futs = {build.__name__: ex.submit(run, build) for build in items}
+    return {name: f.result() for name, f in futs.items()}
 
 
 __all__ = [

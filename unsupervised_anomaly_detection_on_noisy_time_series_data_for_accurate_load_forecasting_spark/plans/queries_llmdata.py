@@ -18,6 +18,7 @@ from ..operators import corpus as CO
 from ..operators.dedup import DUP_SPAN_HOT_CAP
 from ..sources.readers import load_table
 from .registry import register
+from .shared import session_view, view_persist
 
 _TOKS = "string_split(text, ' ')"
 
@@ -1030,7 +1031,10 @@ def pipeline_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for in write+read form); what disappears is re-running the gate
     # expression over every doc's token array 3 extra times. Survivor set
     # identical by determinism of the gate, so the join-gated q equals the
-    # filter-gated q row-for-row.
+    # filter-gated q row-for-row. That equivalence assumes doc_id is a key
+    # of `documents` (true of the sf0.001-sf0.1 tables): with a repeated
+    # id, a copy that fails the gate would pass the semi-join on its
+    # passing twin's id.
     gate_ids = ckpt_coalesced(
         d.filter(TX.quality_score() >= F.lit(_PREP_CUT)).select("doc_id")
     )
@@ -1245,24 +1249,14 @@ def t_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ppl_topk(spark, sf_dir)
 
 
-_PPL_TOPK_MEMO: dict[str, DataFrame] = {}
-
-
+@session_view
 def _ppl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-lifetime bigram-perplexity top-k frame (20 rows persisted) —
     t_bigram_perplexity and pipeline_quality_funnel's removal stage are
     registry siblings over the SAME corpus-LM scoring pass (the _topk memo
     doctrine); the funnel previously re-trained the bigram LM end to end
     (~2.5 s of its wall at sf0.1) to produce the identical 20-row id set."""
-    if sf_dir not in _PPL_TOPK_MEMO:
-        for k in list(_PPL_TOPK_MEMO):
-            _PPL_TOPK_MEMO.pop(k).unpersist(False)
-        df = CO.bigram_perplexity_topk(_docs(spark, sf_dir))
-        from .shared import view_persist
-
-        view_persist(df)
-        _PPL_TOPK_MEMO[sf_dir] = df
-    return _PPL_TOPK_MEMO[sf_dir]
+    return view_persist(CO.bigram_perplexity_topk(_docs(spark, sf_dir)))
 
 
 def _funnel_oracle() -> str:

@@ -22,6 +22,7 @@ from ..ml.softpatch import SoftPatchConfig, softpatch_scores
 from ..ml.windows import day_windows
 from ..operators import anomaly as AN
 from .registry import register
+from .shared import session_view, view_persist
 
 
 def _mirror_scored(cfg: SoftPatchConfig | None = None):
@@ -89,10 +90,6 @@ def _eval_oracle() -> str:
     )
 
 
-_EMB_MEMO: dict[str, DataFrame] = {}
-_MEMO: dict[str, tuple[DataFrame, list[DataFrame]]] = {}
-
-
 def _embedded_ckpt_key(sf_dir: str) -> str:
     """Content-addressed checkpoint key for the corpus-embedding frame:
     raw events-parquet bytes + the source of every module in the
@@ -123,10 +120,11 @@ def _embedded_ckpt_key(sf_dir: str) -> str:
     return AR.input_data_fingerprint([_os.path.join(sf_dir, "events.parquet")], fp)
 
 
+@session_view
 def _embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One persisted corpus-embedding pass per sf_dir, shared by every ML
     query in the session (softpatch scores/eval AND the MLlib ANN scale
-    mode). Inserting evicts + unpersists any other sf_dir's entry.
+    mode).
 
     DISK-CHECKPOINTED like the LSH signature index (queries_similarity.
     _bands): the windowed feature bank is a deterministic build artifact of
@@ -136,25 +134,16 @@ def _embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare). Keyed by input bytes + chain source, so any change recomputes."""
     from ..ml import artifacts as AR
     from ..ml.softpatch import embed_windows
+    from .shared import prepared_df
 
-    if sf_dir not in _EMB_MEMO:
-        for k in list(_EMB_MEMO):
-            _EMB_MEMO.pop(k).unpersist(False)
-        from .shared import prepared_df
-
-        key = _embedded_ckpt_key(sf_dir)
-        emb = AR.restore_dataframe(spark, "mlembed", key)
-        if emb is None:
-            points = AN.inject_anomalies(prepared_df(spark, sf_dir))
-            emb = AR.checkpoint_dataframe(
-                embed_windows(day_windows(points), SoftPatchConfig()), "mlembed", key
-            )
-        emb = emb.repartition(spark.sparkContext.defaultParallelism)
-        from .shared import view_persist
-
-        view_persist(emb)
-        _EMB_MEMO[sf_dir] = emb
-    return _EMB_MEMO[sf_dir]
+    key = _embedded_ckpt_key(sf_dir)
+    emb = AR.restore_dataframe(spark, "mlembed", key)
+    if emb is None:
+        points = AN.inject_anomalies(prepared_df(spark, sf_dir))
+        emb = AR.checkpoint_dataframe(
+            embed_windows(day_windows(points), SoftPatchConfig()), "mlembed", key
+        )
+    return view_persist(emb.repartition(spark.sparkContext.defaultParallelism))
 
 
 def _ensure_banks(spark: SparkSession, sf_dir: str) -> None:
@@ -176,27 +165,24 @@ def _ensure_banks(spark: SparkSession, sf_dir: str) -> None:
     fit_memory_bank_from_embedded(clean, _LOF_CFG)
 
 
-def _scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized softpatch scores per sf_dir: ml_softpatch_scores and
-    ml_softpatch_eval are registry siblings over the same pipeline — in one
-    session the second must reuse the first's (small, persisted) score
-    cache instead of recomputing. The memo takes ownership of softpatch's
-    cache handles so intervening ML queries can't release them."""
+@session_view
+def _scores(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, ...]:
+    """Softpatch scores per sf_dir, as ``(scores, *cache handles)``:
+    ml_softpatch_scores and ml_softpatch_eval are registry siblings over
+    the same pipeline — in one session the second must reuse the first's
+    (small, persisted) score cache instead of recomputing. The view takes
+    ownership of softpatch's cache handles so intervening ML queries can't
+    release them; eviction unpersists them."""
     from ..ml import softpatch as SP
 
-    if sf_dir not in _MEMO:
-        for k in list(_MEMO):
-            for cached in _MEMO.pop(k)[1]:
-                cached.unpersist(False)
-        df = softpatch_scores(
-            None,
-            SoftPatchConfig(),
-            embedded=_embedded(spark, sf_dir),
-            release_previous=False,
-        )
-        handles, SP._live_caches[:] = list(SP._live_caches), []
-        _MEMO[sf_dir] = (df, handles)
-    return _MEMO[sf_dir][0]
+    df = softpatch_scores(
+        None,
+        SoftPatchConfig(),
+        embedded=_embedded(spark, sf_dir),
+        release_previous=False,
+    )
+    handles, SP._live_caches[:] = list(SP._live_caches), []
+    return (df, *handles)
 
 
 @register(
@@ -209,7 +195,7 @@ def _scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_softpatch_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.exact import qround
 
-    return _scores(spark, sf_dir).select(
+    return _scores(spark, sf_dir)[0].select(
         "series_id", "window_start", "window_label", qround("score_norm", 9).alias("score_norm")
     )
 
@@ -297,7 +283,7 @@ def ml_softpatch_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.forecast import auroc
 
-    scored = _scores(spark, sf_dir)
+    scored = _scores(spark, sf_dir)[0]
     # Contamination rate and the (1-contam)-percentile threshold used to be
     # two driver .collect() round-trips (three Spark jobs); both now live in
     # the plan as broadcast 1-row frames (r12 verdict #6). The percentile is

@@ -11,6 +11,7 @@ from ..functions.rng import rng_uniform_sql
 from ..operators import similarity as SIM
 from ..sources.readers import load_table
 from .registry import register
+from .shared import session_view, view_persist
 
 _LONG = """
 long AS (
@@ -21,9 +22,6 @@ long AS (
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
-
-
-_BANDS_MEMO: dict[str, DataFrame] = {}
 
 
 def _bands_ckpt_key(sf_dir: str) -> str:
@@ -44,6 +42,7 @@ def _bands_ckpt_key(sf_dir: str) -> str:
     )
 
 
+@session_view
 def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted banded signatures, shared by the three LSH consumers in a
     session (near-pairs, band-stats, embedding-dedup) — the 32-projection
@@ -56,32 +55,24 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions with one cheap equi-join to re-attach the embedding vectors —
     the r7 bench paid the full 32-projection decimal pass (~14 s at sf0.1)
     in EVERY prepare; a restore is parquet-scan + join (~2 s)."""
-    if sf_dir not in _BANDS_MEMO:
-        from ..ml import artifacts as AR
+    from ..ml import artifacts as AR
 
-        for k in list(_BANDS_MEMO):
-            _BANDS_MEMO.pop(k).unpersist(False)
-        emb = _emb(spark, sf_dir)
-        key = _bands_ckpt_key(sf_dir)
-        stored = AR.restore_dataframe(spark, "lshbands", key)
-        if stored is None:
-            stored = AR.checkpoint_dataframe(
-                SIM.banded_buckets(emb).select("vec_id", "band", "bucket"),
-                "lshbands",
-                key,
-                n_files=4,
-            )
-        b = stored.join(emb, "vec_id").select("vec_id", "embedding", "band", "bucket")
-        from .shared import view_persist
-
-        view_persist(b)
-        _BANDS_MEMO[sf_dir] = b
-    return _BANDS_MEMO[sf_dir]
+    emb = _emb(spark, sf_dir)
+    key = _bands_ckpt_key(sf_dir)
+    stored = AR.restore_dataframe(spark, "lshbands", key)
+    if stored is None:
+        stored = AR.checkpoint_dataframe(
+            SIM.banded_buckets(emb).select("vec_id", "band", "bucket"),
+            "lshbands",
+            key,
+            n_files=4,
+        )
+    return view_persist(
+        stored.join(emb, "vec_id").select("vec_id", "embedding", "band", "bucket")
+    )
 
 
-_NEAR_PAIRS_MEMO: dict[str, DataFrame] = {}
-
-
+@session_view
 def _near_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted exact-cosine candidate-pair graph with NO threshold
     (min_cosine=-1.0). The exact cosine column is deterministic, so EVERY
@@ -95,17 +86,9 @@ def _near_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot dominates, and the fast-prune margin guarantee is what makes
     filter-after ≡ build-at-threshold), and the frame stays candidate-
     bounded (cap per (band, bucket)): 37 k rows at sf0.1."""
-    if sf_dir not in _NEAR_PAIRS_MEMO:
-        for k in list(_NEAR_PAIRS_MEMO):
-            _NEAR_PAIRS_MEMO.pop(k).unpersist(False)
-        p = SIM.lsh_near_pairs(
-            _emb(spark, sf_dir), min_cosine=-1.0, bands=_bands(spark, sf_dir)
-        )
-        from .shared import view_persist
-
-        view_persist(p)
-        _NEAR_PAIRS_MEMO[sf_dir] = p
-    return _NEAR_PAIRS_MEMO[sf_dir]
+    return view_persist(
+        SIM.lsh_near_pairs(_emb(spark, sf_dir), min_cosine=-1.0, bands=_bands(spark, sf_dir))
+    )
 
 
 def _near_pairs_02(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -660,32 +643,25 @@ def _ivfpq_oracle() -> str:
     """
 
 
-_PQ_BOOKS_MEMO: dict[str, list] = {}
-
-
+@session_view
 def _pq_books(spark: SparkSession, sf_dir: str):
     """Session-lifetime PQ codebooks per sf_dir — a PQ index's codebook is a
     build-time artifact every query reuses, so the training collect+fit
     (driver-side integer-exact k-means per subspace) runs once, not per
     registry query."""
-    if sf_dir not in _PQ_BOOKS_MEMO:
-        _PQ_BOOKS_MEMO.clear()
-        sample = (
-            _emb(spark, sf_dir)
-            .orderBy("vec_id")
-            .limit(SIM.PQ_TRAIN_CAP)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        _PQ_BOOKS_MEMO[sf_dir] = SIM.pq_codebooks(
-            [r["vec_id"] for r in sample], [list(r["embedding"]) for r in sample]
-        )
-    return _PQ_BOOKS_MEMO[sf_dir]
+    sample = (
+        _emb(spark, sf_dir)
+        .orderBy("vec_id")
+        .limit(SIM.PQ_TRAIN_CAP)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return SIM.pq_codebooks(
+        [r["vec_id"] for r in sample], [list(r["embedding"]) for r in sample]
+    )
 
 
-_TOPK_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_view
 def _topk(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
     """Session-lifetime per-method ANN top-k frames at the canonical
     evaluation point (n_queries=100, k=5) — the `_scores` memo doctrine
@@ -699,29 +675,20 @@ def _topk(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
     IVF ×4 (r15 probe: s_ann_recall_matrix alone was 13–25 s at sf0.1,
     nearly all of it re-running sibling passes). Each frame is exactly
     100×k rows — kilobytes persisted at any corpus scale."""
-    key = (sf_dir, method)
-    if key not in _TOPK_MEMO:
-        for k in list(_TOPK_MEMO):
-            if k[0] != sf_dir:
-                _TOPK_MEMO.pop(k).unpersist(False)
-        emb = _emb(spark, sf_dir)
-        if method == "bf":
-            df = SIM.cosine_topk(emb, n_queries=100, k=5)
-        elif method == "ivf":
-            df = SIM.ivf_topk(emb, n_queries=100, k=5)
-        elif method == "sq8":
-            df = SIM.sq8_topk(emb, n_queries=100, k=5)
-        elif method == "pq":
-            df = SIM.pq_topk(emb, n_queries=100, k=5, books=_pq_books(spark, sf_dir))
-        elif method == "ivfpq":
-            df = SIM.ivfpq_topk(emb, n_queries=100, k=5, books=_pq_books(spark, sf_dir))
-        else:
-            raise ValueError(f"unknown topk method {method!r}")
-        from .shared import view_persist
-
-        view_persist(df)
-        _TOPK_MEMO[key] = df
-    return _TOPK_MEMO[key]
+    emb = _emb(spark, sf_dir)
+    if method == "bf":
+        df = SIM.cosine_topk(emb, n_queries=100, k=5)
+    elif method == "ivf":
+        df = SIM.ivf_topk(emb, n_queries=100, k=5)
+    elif method == "sq8":
+        df = SIM.sq8_topk(emb, n_queries=100, k=5)
+    elif method == "pq":
+        df = SIM.pq_topk(emb, n_queries=100, k=5, books=_pq_books(spark, sf_dir))
+    elif method == "ivfpq":
+        df = SIM.ivfpq_topk(emb, n_queries=100, k=5, books=_pq_books(spark, sf_dir))
+    else:
+        raise ValueError(f"unknown topk method {method!r}")
+    return view_persist(df)
 
 
 @register(
@@ -905,9 +872,7 @@ def _sem_cents_values_sql() -> tuple[str, int]:
     return vals, k
 
 
-_SEM_CENTS_MEMO: dict[str, list] = {}
-
-
+@session_view
 def _sem_cents(spark: SparkSession, sf_dir: str) -> list:
     """Session-lifetime + disk-checkpointed SemDeDup centroid index per
     sf_dir — like the PQ codebooks, the cluster centroids are a build-time
@@ -917,8 +882,6 @@ def _sem_cents(spark: SparkSession, sf_dir: str) -> list:
     identity, n, k, iters, similarity-module source), restore everywhere
     else. A data regeneration at the same path or any edit to the distance
     /Lloyd math rotates the key, so a stale index can never serve."""
-    if sf_dir in _SEM_CENTS_MEMO:
-        return _SEM_CENTS_MEMO[sf_dir]
     import hashlib
     import os as _os
 
@@ -946,16 +909,13 @@ def _sem_cents(spark: SparkSession, sf_dir: str) -> list:
     key = hashlib.sha256(fp.encode()).hexdigest()[:24]
     bank = AR.load_bank_keyed("semcents", key)
     if bank is not None:
-        cents = [(i + 1, [float(v) for v in row]) for i, row in enumerate(bank)]
-    else:
-        cents = SIM.lloyd_train(emb, k=k, iters=SIM.SEMDEDUP_ITERS)
-        AR.save_bank_keyed(
-            "semcents", key,
-            np.asarray([vec for _, vec in cents], dtype=np.float64),
-            meta={"k": k, "n": int(n)},
-        )
-    _SEM_CENTS_MEMO.clear()
-    _SEM_CENTS_MEMO[sf_dir] = cents
+        return [(i + 1, [float(v) for v in row]) for i, row in enumerate(bank)]
+    cents = SIM.lloyd_train(emb, k=k, iters=SIM.SEMDEDUP_ITERS)
+    AR.save_bank_keyed(
+        "semcents", key,
+        np.asarray([vec for _, vec in cents], dtype=np.float64),
+        meta={"k": k, "n": int(n)},
+    )
     return cents
 
 
@@ -1242,14 +1202,9 @@ def s_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PCA_MEMO: dict[str, tuple] = {}
-
-
+@session_view
 def _pca_fit_memo(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _PCA_MEMO:
-        _PCA_MEMO.clear()
-        _PCA_MEMO[sf_dir] = SIM.pca_fit(_emb(spark, sf_dir))
-    return _PCA_MEMO[sf_dir]
+    return SIM.pca_fit(_emb(spark, sf_dir))
 
 
 def _pca_mirror(sf_dir: str):

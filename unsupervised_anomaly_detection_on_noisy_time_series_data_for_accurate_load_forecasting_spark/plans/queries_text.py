@@ -14,6 +14,7 @@ from ..operators import textops as TX
 from ..operators.textops import poly_hash_duck_expr, poly_hash_sql_expr
 from ..sources.readers import load_table
 from .registry import register
+from .shared import session_view, view_persist
 
 _TOKS = "string_split(text, ' ')"
 _STOP = ", ".join(f"'{w}'" for w in TX.STOPWORDS)
@@ -535,9 +536,7 @@ def _band_case() -> str:
     return f"CASE b {whens} END"
 
 
-_MH_BANDS_MEMO: dict[str, DataFrame] = {}
-
-
+@session_view
 def _mh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted full-corpus MinHash band keys (doc_id, band, band_key) over
     the session shingle view — the signature groupBy runs once per session.
@@ -545,15 +544,7 @@ def _mh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     split consumer (recall curve's 50% sample, incremental dedup's delta) is
     a pure doc_id filter of this frame, identical to recomputing bands on
     the sampled shingles."""
-    if sf_dir not in _MH_BANDS_MEMO:
-        for k in list(_MH_BANDS_MEMO):
-            _MH_BANDS_MEMO.pop(k).unpersist(False)
-        b = DD.minhash_bands(_sh(spark, sf_dir))
-        from .shared import view_persist
-
-        view_persist(b)
-        _MH_BANDS_MEMO[sf_dir] = b
-    return _MH_BANDS_MEMO[sf_dir]
+    return view_persist(DD.minhash_bands(_sh(spark, sf_dir)))
 
 
 _MH_P02_CTES = f"""{_SH_CTES},
@@ -587,9 +578,7 @@ _MH_P02_CTES = f"""{_SH_CTES},
     )"""
 
 
-_MH_CANDS_MEMO: dict[str, DataFrame] = {}
-
-
+@session_view
 def _mh_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted LSH candidate-pair set over the session band view — the
     window-rank + bucket self-join + distinct chain that BOTH the verified
@@ -597,20 +586,10 @@ def _mh_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d_fuzzy_edit_pairs) start from. Candidates are threshold-independent,
     so one materialization serves every verifier (r15: the fuzzy query
     re-ran the whole chain, ~2.5 s of its wall at sf0.1)."""
-    if sf_dir not in _MH_CANDS_MEMO:
-        for k in list(_MH_CANDS_MEMO):
-            _MH_CANDS_MEMO.pop(k).unpersist(False)
-        c = DD.lsh_candidate_pairs(_mh_bands(spark, sf_dir))
-        from .shared import view_persist
-
-        view_persist(c)
-        _MH_CANDS_MEMO[sf_dir] = c
-    return _MH_CANDS_MEMO[sf_dir]
+    return view_persist(DD.lsh_candidate_pairs(_mh_bands(spark, sf_dir)))
 
 
-_MH_PAIRS_MEMO: dict[str, DataFrame] = {}
-
-
+@session_view
 def _mh_pairs_02(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted text-MinHash verified pair set at the LOWEST threshold any
     consumer uses (0.2) — the _near_pairs_02 discipline applied to the text
@@ -618,21 +597,14 @@ def _mh_pairs_02(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-threshold consumer (the 0.5 cluster histogram) is a pure filter
     of this materialization (candidates are threshold-independent, so the
     filtered set is exactly minhash_lsh_dedup at the higher threshold)."""
-    if sf_dir not in _MH_PAIRS_MEMO:
-        for k in list(_MH_PAIRS_MEMO):
-            _MH_PAIRS_MEMO.pop(k).unpersist(False)
-        p = DD.minhash_lsh_dedup(
-            _docs(spark, sf_dir),
-            min_jaccard=0.2,
-            sh=_sh(spark, sf_dir),
-            bands=_mh_bands(spark, sf_dir),
-            cands=_mh_cands(spark, sf_dir),
-        )
-        from .shared import view_persist
-
-        view_persist(p)
-        _MH_PAIRS_MEMO[sf_dir] = p
-    return _MH_PAIRS_MEMO[sf_dir]
+    p = DD.minhash_lsh_dedup(
+        _docs(spark, sf_dir),
+        min_jaccard=0.2,
+        sh=_sh(spark, sf_dir),
+        bands=_mh_bands(spark, sf_dir),
+        cands=_mh_cands(spark, sf_dir),
+    )
+    return view_persist(p)
 
 
 @register(
@@ -758,25 +730,13 @@ _MH_CC_CTES = f"""{_SH_CTES},
     labf AS (SELECT v, min(lab) AS cluster FROM reach GROUP BY v)"""
 
 
-_MH_CC_MEMO: dict[str, DataFrame] = {}
-
-
+@session_view
 def _mh_cc_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted connected-components labels over the 0.5-Jaccard near-dup
     graph — shared by the cluster histogram and the composed dedup
     pipeline, so the BSP label-propagation rounds run once per session."""
-    if sf_dir not in _MH_CC_MEMO:
-        for k in list(_MH_CC_MEMO):
-            _MH_CC_MEMO.pop(k).unpersist(False)
-        pairs = (
-            _mh_pairs_02(spark, sf_dir).filter(F.col("jaccard") >= 0.5).select("d1", "d2")
-        )
-        cc = DD.connected_components(pairs)
-        from .shared import view_persist
-
-        view_persist(cc)
-        _MH_CC_MEMO[sf_dir] = cc
-    return _MH_CC_MEMO[sf_dir]
+    pairs = _mh_pairs_02(spark, sf_dir).filter(F.col("jaccard") >= 0.5).select("d1", "d2")
+    return view_persist(DD.connected_components(pairs))
 
 
 @register(

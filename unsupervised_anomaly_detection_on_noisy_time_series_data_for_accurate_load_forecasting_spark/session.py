@@ -13,6 +13,7 @@ so the same plans hold on a 1000-executor cluster at 100 TB:
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -93,3 +94,21 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, **conf: str):
+    """Set session confs for the body of a ``with`` block and restore each
+    one's previous value (or unset it if it had none) on the way out, also
+    when the body raises. Keys are conf names, passed as ``**{name: value}``."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

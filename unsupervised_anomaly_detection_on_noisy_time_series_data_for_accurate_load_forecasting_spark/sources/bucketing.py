@@ -240,6 +240,8 @@ def compact_partitions(
 
     from pyspark.sql import functions as F
 
+    from ..session import conf_override
+
     loc = None
     for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
         if r["col_name"].strip() == "Location":
@@ -258,9 +260,7 @@ def compact_partitions(
         )
 
     out: list[tuple[str, int, int, int]] = []
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_override(spark, **{"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         for prow in spark.sql(f"SHOW PARTITIONS {table}").collect():
             spec = prow[0]  # e.g. "lang=en" or "a=1/b=x%20y"
             pred = F.lit(True)
@@ -294,8 +294,6 @@ def compact_partitions(
             snap.coalesce(n_target).write.mode("overwrite").insertInto(table)
             files_after = _count_parquet(pdir)
             out.append((spec, files_before, files_after, n_rows))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     return out
 
 

@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import conf_override
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -212,22 +215,21 @@ def run_available_now(
     ckpt = os.path.join(
         _scratch_root(), f"graft-ckpt-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    conf = {}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
     try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_override(spark, **conf):
+            q = (
+                result.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(ckpt, ignore_errors=True)
     return name
 
@@ -411,21 +413,6 @@ def stream_upsert_sink(
 
     from ..sources.readers import load_table
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # r16 (r15 verdict §3): the per-batch merge jobs used the SESSION's
-    # shuffle partitioning (= core count), so every micro-batch paid
-    # per-partition constants that GREW with parallelism — measured
-    # 13.5 s at 32 cores vs 7.9 s at 8 (the suite's only anti-scaler) —
-    # and each rewrite scattered every touched bucket across
-    # shuffle-partition-many files, inflating the next batch's read-back.
-    # State volume, not core count, should size these jobs: the same
-    # byte-derived count every sibling stream uses (ceil(bytes/32 MB) —
-    # thousands at 100 TB, 1 at sf0.1).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(sf_dir))
-    )
     # r15: scratch (source split, state table, checkpoint) on the tmpfs
     # scratch root — this path rewrites the state table once per
     # micro-batch, pure scratch I/O for the replay harness. The dir name
@@ -494,7 +481,23 @@ def stream_upsert_sink(
             "bucket"
         ).parquet(state_dir)
 
-    try:
+    # The per-batch merge jobs used to run at the SESSION's shuffle
+    # partitioning (= core count), so every micro-batch paid per-partition
+    # constants that GREW with parallelism — measured 13.5 s at 32 cores vs
+    # 7.9 s at 8 — and each rewrite scattered every touched bucket across
+    # shuffle-partition-many files, inflating the next batch's read-back.
+    # State volume, not core count, sizes these jobs: the same byte-derived
+    # count every sibling stream uses (ceil(bytes/32 MB) — thousands at
+    # 100 TB, 1 at sf0.1). The setup above runs no job these confs affect
+    # (the source split is an explicit-count repartition into an
+    # unpartitioned dir), so the override covers only the query's run.
+    with conf_override(
+        spark,
+        **{
+            "spark.sql.sources.partitionOverwriteMode": "dynamic",
+            "spark.sql.shuffle.partitions": str(stream_state_partitions(sf_dir)),
+        },
+    ):
         q = (
             stream.writeStream.foreachBatch(merge)
             .option("checkpointLocation", ckpt)
@@ -502,9 +505,6 @@ def stream_upsert_sink(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(state_dir).select(
         "user_id", "event_type", "latest_value", "latest_ts", "n_versions"
     )
