@@ -85,17 +85,11 @@ def main() -> None:
     # analyzed plans, so identical sub-plans across queries legitimately reuse
     # the cache (the same behavior a resident engine gives repeated queries).
     timings: dict[str, float] = {}
-    # Fixed REGISTRATION execution order: queries() is priority-ordered and
-    # reshuffles every round, which moves cache-warming position effects
-    # between queries and makes per-query deltas across rounds noisy.
-    # Registration order is stable across rounds (module import order +
-    # in-file order) and keeps memo producers ahead of their consumers
-    # (ml_softpatch_scores builds the score memo its _eval sibling reads —
-    # alphabetical order would invert that and misattribute the build).
-    registered = list(_plans.REGISTRY)
-    qmap = entry_mod.queries()
-    for name in registered:
-        fn = qmap[name]
+    # queries() is registration order, which keeps view producers ahead of
+    # their consumers (ml_softpatch_scores builds the score view its _eval
+    # sibling reads — alphabetical order would invert that and misattribute
+    # the build).
+    for name, fn in entry_mod.queries().items():
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)

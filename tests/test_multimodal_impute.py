@@ -85,6 +85,26 @@ def test_impute_touches_only_masked(spark, sf_dir):
     assert imputed.filter(F.col("mask") == 1).count() > 0
 
 
+def test_knn_impute_all_nan_donor_slot_stays_nan_without_warning():
+    """M6 kernel: a slot where every donor day is NaN stays NaN and emits no
+    "Mean of empty slice" warning; other gaps get the donors' mean."""
+    import warnings
+
+    import numpy as np
+
+    base = np.arange(24, dtype=float)
+    days = np.stack([base, base + 1.0, base + 2.0])
+    days[:, 5] = np.nan  # every donor is NaN at hour 5
+    days[1, 3] = np.nan
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = IM.knn_impute_series(days.reshape(-1), k=2).reshape(3, 24)
+    assert np.isnan(out[:, 5]).all()
+    assert out[1, 3] == 4.0  # mean of the donor days' 3.0 and 5.0
+    known = ~np.isnan(days)
+    assert (out[known] == days[known]).all()
+
+
 def test_neural_models_gated():
     if HAS_TORCH:
         pytest.skip("torch present; gating not applicable")

@@ -17,6 +17,28 @@ from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_
     load_table,
 )
 
+def test_queries_are_in_registration_order():
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.plans import (
+        queries,
+    )
+
+    assert list(queries()) == list(REGISTRY)
+
+
+def test_check_rejects_unknown_query_names(sf_dir):
+    """A misspelt name must fail the oracle sweep, not read as 0 pass 0 fail."""
+    import os
+    import subprocess
+    import sys
+
+    check = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "check.py")
+    r = subprocess.run(
+        [sys.executable, check, sf_dir, "no_such_query"], capture_output=True, text=True, timeout=300
+    )
+    assert r.returncode != 0
+    assert "no_such_query" in r.stderr
+
+
 # A Window whose input is one global sorted partition prints exactly as:
 #   Window [...]
 #      +- Sort [...]

@@ -6,6 +6,8 @@ parquet tables, then compares row count, column names, and values
 via decimal-exact aggregation). Usage:
 
     python tools/check.py [sf_dir] [query ...]
+
+Query names restrict the sweep; an unknown name exits 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -57,8 +59,17 @@ def main():
     # driver's correctness SF); keep them aligned with the tables we check.
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.plans import (
+        REGISTRY,
+    )
+
+    unknown = sorted(only - set(REGISTRY))
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
+
     from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.session import (
         get_spark,
     )
@@ -71,11 +82,18 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    qs = entry_mod.queries()
+    if only:
+        # Resolve only the selected oracles: a callable oracle trains its
+        # numpy mirror, so oracle_sql() would build every one of them.
+        qs = {name: fn for name, fn in qs.items() if name in only}
+        specs = [REGISTRY[name] for name in qs]
+        oracles = {s.name: s.oracle() if callable(s.oracle) else s.oracle for s in specs if s.oracle is not None}
+    else:
+        oracles = entry_mod.oracle_sql()
+
     n_pass = n_fail = n_weak = 0
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)

@@ -1,15 +1,18 @@
-"""Round-15 optimization probe: time individual registry queries in
-isolation (bench methodology: drain via collect) and dump their
+"""Per-query probe: time individual registry queries in isolation (bench
+methodology: drain via collect) and optionally dump their
 `explain("formatted")` plans.
 
 Usage:
-    python tools/probe_r15.py [--sf SF_DIR] [--explain-dir DIR] [--reps N]
-                              [--tag before|after] query [query ...]
+    python tools/probe.py [--sf SF_DIR] [--explain-dir DIR] [--reps N]
+                          [--tag before|after] [--no-prepare] query [query ...]
 
 For each query:
-  - dumps plans/<tag-dir>/<query>_<tag>.txt when --explain-dir is given
+  - dumps <DIR>/<query>_<tag>.txt when --explain-dir is given
   - runs the query ``reps`` times (fresh DataFrame each rep, results drained
-    with collect like bench.py) and prints per-rep + min wall seconds.
+    with collect like bench.py) and prints min wall seconds plus each rep's
+    split: ``build`` is the ``fn(spark, sf)`` call (driver-side DataFrame
+    construction, including eager view builds and checkpoints), ``collect``
+    is the execution and drain of the returned plan.
 
 prepare() runs first (untimed), exactly like bench.py, so probes measure the
 same thing the bench measures.
@@ -35,7 +38,6 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    import __spark_entry__ as entry_mod
     from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark import (
         plans as _plans,
     )
@@ -43,35 +45,39 @@ def main() -> None:
         get_spark,
     )
 
-    spark = get_spark("probe_r15")
+    unknown = [n for n in args.queries if n not in _plans.REGISTRY]
+    if unknown:
+        ap.error(f"unknown query name(s): {' '.join(unknown)}")
+
+    spark = get_spark("probe")
     spark.range(1).count()
     if not args.no_prepare:
         t0 = time.time()
         _plans.prepare(spark, args.sf)
         print(f"prepare: {time.time() - t0:.2f}s", flush=True)
 
-    qmap = entry_mod.queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in args.queries:
-        fn = qmap[name]
+        fn = _plans.REGISTRY[name].spark
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             df = fn(spark, args.sf)
             plan = df._jdf.queryExecution().explainString(mode)
             with open(os.path.join(args.explain_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
-        walls = []
         if args.reps <= 0:
             continue
+        splits = []
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.time()
             df = fn(spark, args.sf)
+            t1 = time.time()
             n = len(df.collect())
-            walls.append(time.time() - t0)
+            splits.append((t1 - t0, time.time() - t1))
         spark.sparkContext.setJobDescription(None)
-        reps = " ".join(f"{w:.3f}" for w in walls)
-        print(f"{name}: min={min(walls):.3f}s reps=[{reps}] rows={n}", flush=True)
+        reps = " ".join(f"build={b:.3f}/collect={c:.3f}" for b, c in splits)
+        print(f"{name}: min={min(b + c for b, c in splits):.3f}s reps=[{reps}] rows={n}", flush=True)
 
 
 if __name__ == "__main__":

@@ -104,10 +104,13 @@ def knn_impute_series(v, k: int = 3, day_size: int = 24):
             orders = np.argsort(dist[gap_days], axis=1, kind="stable")[:, :k]
             for d, order in zip(gap_days, orders):
                 donors = mat[order]
-                fill = np.nanmean(
-                    np.where(np.isnan(donors), np.nan, donors), axis=0
-                )
-                idx = np.where(nanmask[d])[0]
+                # A slot where every donor is NaN stays NaN. Zero-filling
+                # it first keeps nanmean from warning "Mean of empty slice"
+                # (warnings.catch_warnings is not thread-safe); the other
+                # slots' means are unchanged.
+                empty = np.isnan(donors).all(axis=0)
+                fill = np.nanmean(np.where(empty, 0.0, donors), axis=0)
+                idx = np.where(nanmask[d] & ~empty)[0]
                 mat[d, idx] = fill[idx]
         v[: n_days * day_size] = mat.reshape(-1)
     return v

@@ -1,4 +1,4 @@
-from .registry import REGISTRY, QuerySpec, oracle_sql, queries, register, set_priority
+from .registry import REGISTRY, QuerySpec, oracle_sql, queries, register
 
 # Import for side effect: each module registers its query specs.
 from . import queries_relational  # noqa: E402,F401
@@ -12,18 +12,6 @@ from . import queries_relational2  # noqa: E402,F401
 from . import queries_neural  # noqa: E402,F401
 from . import queries_llmdata  # noqa: E402,F401
 from . import queries_asof  # noqa: E402,F401
-
-# The driver's correctness gate checks the FIRST 50 entries of queries().
-# The ordering is DERIVED lazily on the first queries()/oracle_sql() call
-# (plans/registry._ensure_priority → plans/priority.auto_priority):
-# never-driver-green queries first, then queries whose import-closure
-# touched a file changed since the last verdict commit, then everything
-# else stalest-evidence-first — so the round-3 failure mode (a changed
-# query hand-listed past position 50) cannot recur, and rotation alone
-# bounds every query's evidence age. Lazy, not at import: the derivation
-# runs git diffs + a taint fixpoint (~3 s), and forked Python workers
-# import this package when an island closure references a plans helper —
-# they must not pay the driver-side ordering cost.
 
 
 def prepare(spark, sf_dir: str) -> dict[str, float]:
@@ -93,6 +81,5 @@ __all__ = [
     "queries",
     "oracle_sql",
     "register",
-    "set_priority",
     "prepare",
 ]

@@ -5,6 +5,12 @@
 Column-name discipline: the Spark DataFrame and the oracle SQL must produce
 identical column names (the driver sorts columns by name before hashing).
 Every computed column is therefore aliased on both sides.
+
+Order: ``queries()`` and ``oracle_sql()`` list the queries in registration
+order — the import order of the ``queries_*`` modules in ``plans/__init__.py``,
+then each module's in-file order. That order is fixed by the code, and it
+keeps producers ahead of their consumers (``ml_softpatch_scores`` builds the
+score view its ``ml_softpatch_eval`` sibling reads).
 """
 
 from __future__ import annotations
@@ -31,55 +37,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# Explicit presentation order for queries()/oracle_sql(), decoupled from
-# import/registration order. The driver's correctness gate hash-checks the
-# FIRST 50 entries of queries() each round, so this list front-loads the
-# queries most in need of fresh driver evidence (never-checked, changed this
-# round) ahead of queries already driver-green in prior rounds. Names absent
-# from the list follow in registration order.
-#
-# The ordering is computed LAZILY on the first queries()/oracle_sql() call,
-# not at package import: deriving it runs git diffs plus a taint fixpoint
-# (~3 s), and the plans package is imported by every forked Python worker
-# whose mapInPandas closure references a plans-module helper — an import-
-# time computation would bill those 3 s to whichever codec/ML island the
-# worker first serves. Workers never call queries(), so they never pay it.
-PRIORITY: list[str] = []
-_PRIORITY_DERIVED = False
-
-
-def set_priority(names: list[str]) -> None:
-    global _PRIORITY_DERIVED
-    unknown = [n for n in names if n not in REGISTRY]
-    if unknown:
-        raise ValueError(f"priority names not registered: {unknown}")
-    PRIORITY[:] = names
-    _PRIORITY_DERIVED = True
-
-
-def _ensure_priority() -> None:
-    global _PRIORITY_DERIVED
-    if _PRIORITY_DERIVED:
-        return
-    _PRIORITY_DERIVED = True  # set first: a failure degrades to registration order
-    try:
-        from .priority import auto_priority
-
-        PRIORITY[:] = auto_priority(list(REGISTRY))
-    except Exception:
-        # Degrade to registration order for the FIRST caller too, not just
-        # subsequent ones — an unreadable git tree or a taint-derivation bug
-        # must not take down queries()/oracle_sql().
-        PRIORITY[:] = []
-
-
-def _ordered() -> list[QuerySpec]:
-    _ensure_priority()
-    prioritized = [REGISTRY[n] for n in PRIORITY]
-    rest = [s for n, s in REGISTRY.items() if n not in set(PRIORITY)]
-    return prioritized + rest
-
-
 def register(
     name: str,
     oracle: str | Callable[[], str] | None = None,
@@ -96,12 +53,12 @@ def register(
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {s.name: s.spark for s in _ordered()}
+    return {s.name: s.spark for s in REGISTRY.values()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         s.name: (s.oracle() if callable(s.oracle) else s.oracle)
-        for s in _ordered()
+        for s in REGISTRY.values()
         if s.oracle is not None
     }
