@@ -1,14 +1,10 @@
-"""S9 artifact round-trip, M6 KNN-impute invariants, M23 grid runner."""
+"""M6 KNN-impute invariants, M23 grid runner (the S9 artifact store is
+covered by tests/test_artifact_store.py)."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.ml.artifacts import (
-    load_bank,
-    save_bank,
-)
 from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.ml.imputer import (
     knn_impute_days,
 )
@@ -21,14 +17,6 @@ from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_
 from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.sources.readers import (
     load_table,
 )
-
-
-def test_s9_artifact_roundtrip(tmp_path):
-    bank = np.arange(12.0).reshape(3, 4)
-    meta = {"min_score": 0.1, "max_score": 9.5, "window_threshold": 3.2}
-    save_bank(str(tmp_path / "model"), bank, meta)
-    b2, m2 = load_bank(str(tmp_path / "model"))
-    assert (b2 == bank).all() and m2 == meta
 
 
 def test_m6_knn_impute_invariants(spark, sf_dir):

@@ -96,6 +96,7 @@ def test_bank_fits_and_scores(windows):
     assert all(r.score >= 0 for r in rows)
 
 
+@pytest.mark.filterwarnings("error::UserWarning")
 def test_lof_weights_mode(windows):
     from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.ml.softpatch import (
         embed_windows,

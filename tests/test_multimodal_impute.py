@@ -8,10 +8,6 @@ from pyspark.sql import functions as F
 from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.ml import (
     imputer as IM,
 )
-from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.ml.neural import (
-    HAS_TORCH,
-    LSTMAutoencoder,
-)
 from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.operators import (
     anomaly as AN,
     multimodal as MM,
@@ -103,13 +99,6 @@ def test_knn_impute_all_nan_donor_slot_stays_nan_without_warning():
     assert out[1, 3] == 4.0  # mean of the donor days' 3.0 and 5.0
     known = ~np.isnan(days)
     assert (out[known] == days[known]).all()
-
-
-def test_neural_models_gated():
-    if HAS_TORCH:
-        pytest.skip("torch present; gating not applicable")
-    with pytest.raises(NotImplementedError, match="torch"):
-        LSTMAutoencoder()
 
 
 # --- real stdlib codecs (operators/codecs.py) ------------------------------

@@ -27,13 +27,6 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert back.count() == out["cleaned"].count()
 
 
-def test_pipeline_memory_bank_mode(spark, sf_dir):
-    out = run_pipeline(spark, sf_dir, PipelineConfig(detector="memory_bank"))
-    scores = out["window_scores"]
-    assert scores.filter(F.col("score_norm").isNull()).count() == 0
-    assert scores.count() > 0
-
-
 def test_metrics_log_contract(spark, sf_dir, tmp_path):
     """The persisted experiment-log (MLflow analog) round-trips with the
     documented schema and carries both pipeline stages."""
@@ -52,7 +45,7 @@ def test_metrics_log_contract(spark, sf_dir, tmp_path):
     log = MetricsLog(spark, str(tmp_path / "st" / "mlog"))
     params = log.params()
     assert set(params.columns) == {"run_id", "stage", "param", "value"}
-    assert params.filter(F.col("param") == "detector").count() == 1
+    assert params.filter(F.col("param") == "z_threshold").count() == 1
     # append semantics: a second run accumulates, partitioned by run_id
     log.log_metrics("r2", "extra", {"x": 1.0})
     assert log.metrics().filter(F.col("run_id") == "r2").count() == 1

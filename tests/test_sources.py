@@ -4,6 +4,7 @@ sink/source (S6/S7)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.sources.readers import (
@@ -168,7 +169,11 @@ def _write_minimal_xlsx(path, header, rows):
         z.writestr("xl/worksheets/sheet1.xml", sheet)
 
 
+@pytest.mark.filterwarnings("error::UserWarning")
 def test_s3_xlsx_roundtrip(spark, tmp_path):
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.session import (
+        conf_override,
+    )
     from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.sources.readers import (
         read_excel_series,
         read_xlsx,
@@ -194,6 +199,13 @@ def test_s3_xlsx_roundtrip(spark, tmp_path):
     assert len(rows) == 48
     first = min(rows, key=lambda r: r.ts)
     assert (first.ts.year, first.ts.month, first.ts.day, first.ts.hour) == (2024, 1, 1, 0)
+    # createDataFrame stays on Arrow (a fallback warns, which fails this
+    # test) and yields the same timestamps as the non-Arrow row path
+    with conf_override(spark, **{"spark.sql.execution.arrow.pyspark.enabled": "false"}):
+        fallback = read_excel_series(
+            spark, str(tmp_path / "*.xlsx"), "Time", "Power (kW)", max_zero_ratio=0.05
+        ).collect()
+    assert sorted(r.ts for r in rows) == sorted(r.ts for r in fallback)
 
 
 def test_jsonl_corpus_roundtrip_and_pinned_schema(spark, sf_dir, tmp_path):

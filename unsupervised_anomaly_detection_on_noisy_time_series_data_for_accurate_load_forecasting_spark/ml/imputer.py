@@ -11,8 +11,8 @@ The mask is the deterministic hash-counter RNG (per series-day, contiguous
 program, mirrored in the DuckDB oracle. The model slot:
 - default: **seasonal-profile imputer** — per (series, hour-of-day) exact
   mean over *unmasked* points; fully declarative, oracle-checkable.
-- ``ml/neural.py`` hosts the torch LSTM-AE for environments that have torch
-  (import-gated); it slots into the same splice contract (M18): output
+- trained: the numpy denoising AE (``ml/neural_np.py``, query
+  ``m17_ae_imputation``) slots into the same splice contract (M18): output
   replaces masked points only.
 """
 

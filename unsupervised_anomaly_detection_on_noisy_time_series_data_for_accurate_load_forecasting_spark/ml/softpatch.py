@@ -309,7 +309,7 @@ def gaussian_patch_stats(embedded: DataFrame, cfg: SoftPatchConfig) -> dict[int,
         ]
     )
 
-    def partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partials(key, pdf):
         pdf = pdf.sort_values(["series_id", "window_start"]).reset_index(drop=True)
         X = np.stack(pdf["feature"].to_numpy())
         return pd.DataFrame(
@@ -396,7 +396,7 @@ def patch_weights(embedded: DataFrame, cfg: SoftPatchConfig, mode: str | None = 
 
 
 def _lof_patch_weights(embedded: DataFrame, cfg: SoftPatchConfig) -> DataFrame:
-    def per_patch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_patch(key, pdf):
         # Pin row order: float kNN ties are order-sensitive, and Arrow batch
         # arrival order is not deterministic. The row SET is already capped
         # engine-side; this sort only fixes the in-matrix order.
@@ -509,35 +509,32 @@ def fit_memory_bank_from_embedded(embedded: DataFrame, cfg: SoftPatchConfig) -> 
     ``F.percentile`` is exact for oracle parity; at 100 TB swap
     ``percentile_approx`` (single-pass sketch) — the cut only gates the
     candidate pool, not the scores."""
-    from ..functions.rng import rng_draw
-
-    # Checkpoint restore (the reference pickles its fitted bank + index,
-    # softpatch.py:403-449): the fit is deterministic in (embedded corpus,
-    # config, fit source), so the bank caches under a key derived from
-    # exactly those three. The corpus enters the key as a commutative
-    # xor-of-row-hashes signature — one cheap agg over the (persisted)
-    # embedding, partitioning-independent by construction — so a data or
-    # math change rotates the key and restoring a stale bank is impossible;
-    # the independent numpy-mirror oracle (which always refits) would
-    # hash-catch a signature collision anyway.
-    import hashlib as _hl
-    import os as _os
-
     from . import artifacts as AR
 
+    # Checkpoint restore (the reference pickles its fitted bank + index,
+    # softpatch.py:403-449). The corpus enters the key as a commutative
+    # xor-of-row-hashes signature — one cheap agg over the (persisted)
+    # embedding, partitioning-independent by construction — since the
+    # input here is a frame, not a file; the independent numpy-mirror
+    # oracle (which always refits) would hash-catch a signature collision.
     sig_row = embedded.agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(
             F.xxhash64("series_id", "window_start", "patch_idx", "feature")
         ).alias("sig"),
     ).collect()[0]
-    fp = AR.source_fingerprint(__name__, extra=repr(cfg))
-    key = _hl.sha256(
-        f"{fp}|{sig_row['n']}|{sig_row['sig']}".encode()
-    ).hexdigest()[:24]
-    cached = AR.load_bank_keyed("spbank", key)
-    if cached is not None:
-        return cached
+    return AR.cached(
+        "spbank",
+        f"{sig_row['n']}|{sig_row['sig']}",
+        repr(cfg),
+        lambda: {"bank": {"bank": _fit_bank(embedded, cfg)}},
+        AR.ARRAYS,
+    )["bank"]["bank"]
+
+
+def _fit_bank(embedded: DataFrame, cfg: SoftPatchConfig) -> np.ndarray:
+    """The uncached fit behind :func:`fit_memory_bank_from_embedded`."""
+    from ..functions.rng import rng_draw
 
     weighted = patch_weights(embedded, cfg)
     weighted.persist()  # two actions below (cut/count + collect) share lineage
@@ -570,9 +567,7 @@ def fit_memory_bank_from_embedded(embedded: DataFrame, cfg: SoftPatchConfig) -> 
     # row's weight so matches to noisy bank points score lower confidence.
     w = w_all[idx]
     w_norm = w / w.max() if w.max() > 0 else np.ones_like(w)
-    bank = np.hstack([feats[idx], w_norm[:, None]])
-    AR.save_bank_keyed("spbank", key, bank, {"n": int(sig_row["n"])})
-    return bank
+    return np.hstack([feats[idx], w_norm[:, None]])
 
 
 def nn_weighted_scores(

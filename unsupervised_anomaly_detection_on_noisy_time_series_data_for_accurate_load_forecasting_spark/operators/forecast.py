@@ -11,8 +11,7 @@ The neural forecasters (seq2seq GRU / SCINet, M20/M21) are driver-side Torch
 training loops in the reference; here the *pipeline* around them — windowing,
 input/target splits, metric evaluation — is fully declarative, and the model
 slot is filled by (a) the seasonal-naive baseline below (pure SQL, oracle-
-checkable) and (b) the Torch island in ml/forecaster.py when torch is
-available.
+checkable) and (b) the trained numpy forecasters in ml/forecaster.py.
 
 EWMA is a sequential recurrence, which has no exact distributed form — we
 *define* the engine's EWMA on a 1e-6 fixed-point lattice:

@@ -5,9 +5,10 @@ program per stage with explicit parquet contracts between stages.
 Stages (reference stage → engine op):
 1. ingest+regularize  (process_*.run)        → operators.anomaly.prepared_series
 2. inject             (synth_anomaly)        → operators.anomaly.inject_anomalies
-3. detect             (AD / TS-SoftPatch)    → 'sql' mode: M15 window-function
-                                                detector; 'memory_bank' mode:
-                                                ml.softpatch (mapInPandas)
+3. detect             (AD / TS-SoftPatch)    → M15 window-function detector
+                                                (the SoftPatch memory bank is
+                                                ml.softpatch; it does not feed
+                                                this chain yet)
 4. impute             (LSTM-AE)              → weekly-lag + profile imputer
 5. reconstruct        (pipeline.py:314-345)  → cleaned point series
 6. forecast-eval      (LF_run ×2)            → seasonal-naive A12 metrics on
@@ -33,7 +34,6 @@ from ..sources.readers import load_table
 @dataclass(frozen=True)
 class PipelineConfig:
     contam_rate: float = AN.CONTAM_RATE
-    detector: str = "sql"  # 'sql' (M15 stand-in) | 'memory_bank' (ml.softpatch)
     z_threshold: float = 2.5
     forecast_lag_hours: int = 168
     split_ratio: float = 0.8
@@ -53,15 +53,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, cfg: PipelineConfig | None = 
     injected = AN.inject_anomalies(series, cfg.contam_rate)
     out["injected"] = injected
 
-    if cfg.detector == "memory_bank":
-        from ..ml.softpatch import SoftPatchConfig, softpatch_scores
-        from ..ml.windows import day_windows
-
-        windows = day_windows(injected)
-        out["window_scores"] = softpatch_scores(windows, SoftPatchConfig())
-        flagged = AN.detect_flags(injected, z_threshold=cfg.z_threshold)
-    else:
-        flagged = AN.detect_flags(injected, z_threshold=cfg.z_threshold)
+    flagged = AN.detect_flags(injected, z_threshold=cfg.z_threshold)
     out["flagged"] = flagged
 
     cleaned = AN.impute_flagged(flagged)

@@ -90,36 +90,6 @@ def _eval_oracle() -> str:
     )
 
 
-def _embedded_ckpt_key(sf_dir: str) -> str:
-    """Content-addressed checkpoint key for the corpus-embedding frame:
-    raw events-parquet bytes + the source of every module in the
-    events→windows→features derivation chain + the embedding config. Any
-    data or math change rotates the key back onto the honest recompute."""
-    import os as _os
-
-    from ..ml import artifacts as AR
-
-    # import the chain so source_fingerprint can read each module's file
-    from ..ml import neural as _nn, softpatch as _sp, windows as _wd  # noqa: F401
-    from ..operators import anomaly as _an, timeseries as _ts  # noqa: F401
-    from ..sources import readers as _rd  # noqa: F401
-    from . import shared as _sh  # noqa: F401
-
-    pkg = __name__.rsplit(".plans.", 1)[0]
-    fp = AR.source_fingerprint(
-        f"{pkg}.sources.readers",
-        f"{pkg}.operators.timeseries",
-        f"{pkg}.operators.anomaly",
-        f"{pkg}.plans.shared",
-        f"{pkg}.ml.softpatch",
-        f"{pkg}.ml.neural",
-        f"{pkg}.ml.windows",
-        __name__,
-        extra=repr(SoftPatchConfig()),
-    )
-    return AR.input_data_fingerprint([_os.path.join(sf_dir, "events.parquet")], fp)
-
-
 @session_view
 def _embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One persisted corpus-embedding pass per sf_dir, shared by every ML
@@ -131,18 +101,22 @@ def _embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus — a resident engine materializes it to shared storage once
     and every later session scans it (~0.5 s) instead of re-running the
     embedding islands (~7-16 s at sf0.1, the single largest CPU item in
-    prepare). Keyed by input bytes + chain source, so any change recomputes."""
+    prepare). Keyed by input bytes + package source, so any change recomputes."""
+    import os
+
     from ..ml import artifacts as AR
     from ..ml.softpatch import embed_windows
     from .shared import prepared_df
 
-    key = _embedded_ckpt_key(sf_dir)
-    emb = AR.restore_dataframe(spark, "mlembed", key)
-    if emb is None:
-        points = AN.inject_anomalies(prepared_df(spark, sf_dir))
-        emb = AR.checkpoint_dataframe(
-            embed_windows(day_windows(points), SoftPatchConfig()), "mlembed", key
-        )
+    emb = AR.cached(
+        "mlembed",
+        [os.path.join(sf_dir, "events.parquet")],
+        "",
+        lambda: embed_windows(
+            day_windows(AN.inject_anomalies(prepared_df(spark, sf_dir))), SoftPatchConfig()
+        ),
+        AR.frame(spark),
+    )
     return view_persist(emb.repartition(spark.sparkContext.defaultParallelism))
 
 

@@ -24,24 +24,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _bands_ckpt_key(sf_dir: str) -> str:
-    """Content-addressed checkpoint key for the banded signatures: raw
-    embedding-parquet bytes + the similarity module source + the signature
-    hyperparameters. Content (not mtime) so a byte-identical testdata
-    regeneration still restores; any data or math change rotates the key."""
-    from ..ml import artifacts as AR
-
-    import os as _os
-
-    fp = AR.source_fingerprint(
-        SIM.__name__,
-        extra=f"planes={SIM.N_PLANES} bands={SIM.N_BANDS} cap={SIM.BUCKET_CAP}",
-    )
-    return AR.input_data_fingerprint(
-        [_os.path.join(sf_dir, "embeddings.parquet")], fp
-    )
-
-
 @session_view
 def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted banded signatures, shared by the three LSH consumers in a
@@ -55,18 +37,18 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions with one cheap equi-join to re-attach the embedding vectors —
     the r7 bench paid the full 32-projection decimal pass (~14 s at sf0.1)
     in EVERY prepare; a restore is parquet-scan + join (~2 s)."""
+    import os
+
     from ..ml import artifacts as AR
 
     emb = _emb(spark, sf_dir)
-    key = _bands_ckpt_key(sf_dir)
-    stored = AR.restore_dataframe(spark, "lshbands", key)
-    if stored is None:
-        stored = AR.checkpoint_dataframe(
-            SIM.banded_buckets(emb).select("vec_id", "band", "bucket"),
-            "lshbands",
-            key,
-            n_files=4,
-        )
+    stored = AR.cached(
+        "lshbands",
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        "",
+        lambda: SIM.banded_buckets(emb).select("vec_id", "band", "bucket"),
+        AR.frame(spark, n_files=4),
+    )
     return view_persist(
         stored.join(emb, "vec_id").select("vec_id", "embedding", "band", "bucket")
     )
@@ -878,45 +860,22 @@ def _sem_cents(spark: SparkSession, sf_dir: str) -> list:
     sf_dir — like the PQ codebooks, the cluster centroids are a build-time
     artifact of the corpus that every dedup run over the same data reuses:
     train the k = clamp(sqrt(n)) Lloyd index once (distributed driver
-    loop), checkpoint to the artifact store keyed by (embedding-file
-    identity, n, k, iters, similarity-module source), restore everywhere
-    else. A data regeneration at the same path or any edit to the distance
-    /Lloyd math rotates the key, so a stale index can never serve."""
-    import hashlib
-    import os as _os
+    loop), store it in the artifact store keyed by the embedding file's
+    bytes, restore everywhere else."""
+    import os
 
     import numpy as np
 
     from ..ml import artifacts as AR
 
-    emb = _emb(spark, sf_dir)
-    n = emb.count()
-    k = SIM.semdedup_k(n)
-    ident = []
-    for uri in sorted(emb.inputFiles()):
-        from urllib.parse import urlparse
+    def build():
+        emb = _emb(spark, sf_dir)
+        cents = SIM.lloyd_train(emb, k=SIM.semdedup_k(emb.count()), iters=SIM.SEMDEDUP_ITERS)
+        return {"semcents": {"cents": np.asarray([vec for _, vec in cents], dtype=np.float64)}}
 
-        p = urlparse(uri).path
-        try:
-            st = _os.stat(p)
-            ident.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            ident.append(p)
-    fp = AR.source_fingerprint(
-        SIM.__name__,
-        extra=f"n={n} k={k} iters={SIM.SEMDEDUP_ITERS} files={';'.join(ident)}",
-    )
-    key = hashlib.sha256(fp.encode()).hexdigest()[:24]
-    bank = AR.load_bank_keyed("semcents", key)
-    if bank is not None:
-        return [(i + 1, [float(v) for v in row]) for i, row in enumerate(bank)]
-    cents = SIM.lloyd_train(emb, k=k, iters=SIM.SEMDEDUP_ITERS)
-    AR.save_bank_keyed(
-        "semcents", key,
-        np.asarray([vec for _, vec in cents], dtype=np.float64),
-        meta={"k": k, "n": int(n)},
-    )
-    return cents
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    bank = AR.cached("semcents", [path], "", build, AR.ARRAYS)["semcents"]["cents"]
+    return [(i + 1, [float(v) for v in row]) for i, row in enumerate(bank)]
 
 
 def _semantic_dedup_oracle() -> str:

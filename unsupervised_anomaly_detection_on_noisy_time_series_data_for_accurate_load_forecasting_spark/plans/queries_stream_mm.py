@@ -213,7 +213,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("M16", "M17", "M18"),
     doc="Deterministic contiguous training masks → seasonal-profile imputation "
-    "→ splice → masked-point MAE/MSE (the M17 model slot is torch-gated).",
+    "→ splice → masked-point MAE/MSE (the trained M17 AE is m17_ae_imputation).",
 )
 def m16_masked_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shared import prepared_df

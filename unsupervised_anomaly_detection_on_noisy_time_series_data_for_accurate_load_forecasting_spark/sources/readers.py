@@ -223,6 +223,11 @@ def read_excel_series(
             )
         else:
             pdf["ts"] = pd.to_datetime(pdf["ts"])
+        # Spark timestamps hold microseconds. A serial's float day fraction
+        # leaves nanoseconds that Arrow's safe cast rejects (createDataFrame
+        # then falls back to its slow row path, which truncates them), so
+        # floor to the microsecond here: same values, Arrow path kept.
+        pdf["ts"] = pdf["ts"].dt.floor("us")
         pdf["value"] = pd.to_numeric(pdf["value"], errors="coerce")
         pdf["_file"] = p
         frames.append(pdf)
